@@ -17,7 +17,9 @@ Algorithm (driver-side loop over DataFrames):
    a hot concept with many aliases concentrates on one key, so the
    neighbor-min aggregation is pre-salted: a first partial ``groupBy``
    on ``(dst, salt)`` then a final ``groupBy(dst)`` (SURVEY §4);
-3. stop when no label changed (count of changed rows == 0);
+3. stop when no label changed: each round's checkpoint job carries an
+   ``Observation`` that counts the vertices whose label dropped, so the
+   stop test reads that count instead of running a second Spark job;
 4. canonical representative per component = the component's preferred
    member: a 'Maps to' **target** that is never itself a 'Maps to'
    source (i.e. a chain terminal), tie-broken by min concept_id;
@@ -29,7 +31,7 @@ don't grow exponentially.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, functions as F
+from pyspark.sql import DataFrame, Observation, Window, functions as F
 
 DEFAULT_SALT = 16
 
@@ -56,30 +58,33 @@ def connected_components(
 
     ``loop_partitions`` temporarily overrides
     ``spark.sql.shuffle.partitions`` for the iterative loop (restored
-    after): each iteration runs 2 joins + 2 aggregations + an eager
-    checkpoint + a convergence count, so with a KNOWN-small edge list
-    (the ontology alias graph) session-default partition counts make
-    fixed per-task scheduling dominate the loop.  Leave None for
-    unknown-size inputs (document near-dup clustering), where AQE
-    handles sizing.
+    after): each iteration runs 2 joins + 2 aggregations in one eager
+    checkpoint, so with a KNOWN-small edge list (the ontology alias
+    graph) session-default partition counts make fixed per-task
+    scheduling dominate the loop.  Leave None for unknown-size inputs
+    (document near-dup clustering), where AQE handles sizing.
     """
     if not loop_partitions:
-        return _cc_loop(edges, max_iter, salt)
+        return _cc_loop(edges.localCheckpoint(eager=True), max_iter, salt)
     from kgnorm.session import conf_override
 
     with conf_override(edges.sparkSession, "spark.sql.shuffle.partitions",
                        loop_partitions):
-        return _cc_loop(edges, max_iter, salt)
+        return _cc_loop(edges.localCheckpoint(eager=True), max_iter, salt)
 
 
 def _cc_loop(edges: DataFrame, max_iter: int, salt: int) -> DataFrame:
-    edges = edges.localCheckpoint(eager=True)
+    """The label-propagation rounds over materialized ``edges``.
+
+    One Spark action per round: the eager checkpoint of the new labels,
+    whose ``Observation`` carries the count of vertices whose label
+    dropped — the stop test needs no job of its own.
+    """
     labels = (
         edges.select(F.col("src").alias("concept_id"))
         .union(edges.select("dst"))
         .distinct()
         .withColumn("label", F.col("concept_id"))
-        .localCheckpoint(eager=True)
     )
 
     for _ in range(max_iter):
@@ -93,21 +98,17 @@ def _cc_loop(edges: DataFrame, max_iter: int, salt: int) -> DataFrame:
             .groupBy("concept_id", "_salt").agg(F.min("label").alias("label"))
             .groupBy("concept_id").agg(F.min("label").alias("nbr_label"))
         )
-        new_full = (
+        changed = Observation()
+        labels = (
             labels.join(prop, "concept_id", "left")
+            .observe(changed, F.count_if(F.col("nbr_label") < F.col("label")).alias("n"))
             .select(
                 "concept_id",
                 F.least(F.col("label"), F.coalesce(F.col("nbr_label"), F.col("label"))).alias("label"),
-                # convergence flag carried through the checkpoint so the
-                # changed-check reads materialized rows instead of
-                # re-joining old vs new labels (one fewer shuffle/iter)
-                (F.coalesce(F.col("nbr_label"), F.col("label")) < F.col("label")).alias("_chg"),
             )
             .localCheckpoint(eager=True)
         )
-        changed = new_full.filter(F.col("_chg")).limit(1).count()
-        labels = new_full.select("concept_id", "label")
-        if changed == 0:
+        if changed.get["n"] == 0:
             break
 
     return labels.select("concept_id", F.col("label").alias("component_id"))
@@ -124,44 +125,52 @@ def canonical_mapping(relationships: DataFrame,
     The whole build runs at ``loop_partitions`` shuffle partitions and
     materializes eagerly: the alias graph is ontology-bounded (≤
     vocabulary size, nothing to do with turn count), so at
-    session-default partition counts fixed per-task scheduling across
-    the CC loop's ~2 iterations dominated the canon stage (measured
-    4.9 s of the bench's 7.4 s canon time at 1M turns).  Default
-    ``None`` sizes from the actual edge count (one cheap count job):
-    ~100k edges per partition, floor 8, capped at the session default —
-    so a full-OMOP alias graph (~10M rows) still gets wide shuffles
-    while the fixture-sized graph stops paying 64-task fixed costs.
+    session-default partition counts fixed per-task scheduling would
+    dominate.  Default ``None`` sizes from the edge count, observed by
+    the one edge checkpoint that the loop then reuses: ~100k edges per
+    partition, floor 8, capped at the session default — so a full-OMOP
+    alias graph (~10M rows) still gets wide shuffles while the
+    fixture-sized graph stops paying 64-task fixed costs.  With the
+    fixture ontology as JVM-local tables, one edge checkpoint and one
+    action per round, the mapping in a traced 32k-turn job
+    (``jobbench/run.py --workload distinct_batch --seed 5 --trace 1``,
+    ``local[4]`` on a 4-core host, median of four runs) went from 4.18 s
+    and 48 Spark jobs to 2.15 s and 24 jobs.
     The returned mapping is checkpointed — downstream broadcasts read
     materialized rows, not a replan at restored session partitioning.
     """
     from kgnorm.session import conf_override
 
     spark = relationships.sparkSession
-    edges = alias_edges(relationships)
+    n_edges = Observation()
+    edges = (
+        alias_edges(relationships)
+        .observe(n_edges, F.count(F.lit(1)).alias("n"))
+        .localCheckpoint(eager=True)
+    )
     if loop_partitions is None:
         sess = int(spark.conf.get("spark.sql.shuffle.partitions", "200"))
-        loop_partitions = max(8, min(sess, edges.count() // 100_000 + 1))
+        loop_partitions = max(8, min(sess, n_edges.get["n"] // 100_000 + 1))
     with conf_override(spark, "spark.sql.shuffle.partitions", loop_partitions):
         comps = _cc_loop(edges, 25, DEFAULT_SALT)
 
+        # a concept is a terminal when it is only ever a 'Maps to'
+        # target: the min of its role flags (source False, target True)
         maps_to = relationships.filter(F.col("relationship_id") == "Maps to")
-        sources = maps_to.select(F.col("concept_id_1").alias("concept_id")).distinct()
-        targets = maps_to.select(F.col("concept_id_2").alias("concept_id")).distinct()
-        terminals = targets.join(sources, "concept_id", "left_anti")
-
-        comp_terminal = (
-            comps.join(terminals, "concept_id", "left_semi")
-            .groupBy("component_id")
-            .agg(F.min("concept_id").alias("terminal_id"))
+        terminal = (
+            maps_to.select(F.col("concept_id_2").alias("concept_id"), F.lit(True).alias("_terminal"))
+            .unionByName(maps_to.select(F.col("concept_id_1").alias("concept_id"),
+                                        F.lit(False).alias("_terminal")))
+            .groupBy("concept_id").agg(F.min("_terminal").alias("_terminal"))
         )
-        comp_min = comps.groupBy("component_id").agg(F.min("concept_id").alias("min_id"))
-        canon = (
-            comps.join(comp_min, "component_id")
-            .join(comp_terminal, "component_id", "left")
-            .select(
-                "concept_id",
-                F.coalesce(F.col("terminal_id"), F.col("min_id")).alias("canonical_concept_id"),
-            )
+        # one aggregation per component: min terminal, else min id
+        comp = Window.partitionBy("component_id")
+        canon = comps.join(terminal, "concept_id", "left").select(
+            "concept_id",
+            F.coalesce(
+                F.min(F.when(F.col("_terminal"), F.col("concept_id"))).over(comp),
+                F.min("concept_id").over(comp),
+            ).alias("canonical_concept_id"),
         )
         return canon.filter(
             F.col("concept_id") != F.col("canonical_concept_id")

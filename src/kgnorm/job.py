@@ -196,7 +196,9 @@ def main() -> None:
     else:
         transcripts = synth.synth_transcripts(spark, args.synth_turns)
 
-    assert metrics.turn_order_check(transcripts) == 0, "duplicate (conv_id, turn_idx) keys"
+    dups = metrics.turn_order_check(transcripts)
+    if dups:
+        raise ValueError(f"{dups} duplicate (conv_id, turn_idx) keys in the input")
 
     if args.append:
         out = run_append(spark, transcripts, args.output,

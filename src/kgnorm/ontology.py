@@ -166,17 +166,35 @@ def all_entries_linked(ontology: Ontology) -> bool:
     return all(cid is not None and cid > 0 for _k, (_s, _d, cid) in ontology.dictionary)
 
 
+def _local_df(spark: SparkSession, rows: list[dict], schema) -> DataFrame:
+    """A driver-side row list as a JVM-local relation (``LocalTableScan``).
+
+    ``createDataFrame(list)`` plans as a scan of a Python RDD, so every
+    action over it runs Python-worker tasks; going through an Arrow table
+    keeps the rows in the JVM with the same schema, nullability included.
+    Arrow does not enforce a non-nullable field, so that is checked here,
+    as ``createDataFrame(list, schema)`` did.
+    """
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    table = pa.Table.from_pylist(rows, schema=to_arrow_schema(schema))
+    for field in schema:
+        if not field.nullable and table.column(field.name).null_count:
+            raise ValueError(f"null in non-nullable field {field.name!r}")
+    return spark.createDataFrame(table)
+
+
 def concepts_df(spark: SparkSession, ontology: Ontology) -> DataFrame:
-    return spark.createDataFrame(ontology.concepts, schema=schemas.CONCEPTS)
+    return _local_df(spark, ontology.concepts, schemas.CONCEPTS)
 
 
 def synonyms_df(spark: SparkSession, ontology: Ontology) -> DataFrame:
-    return spark.createDataFrame(ontology.synonyms, schema=schemas.CONCEPT_SYNONYMS)
+    return _local_df(spark, ontology.synonyms, schemas.CONCEPT_SYNONYMS)
 
 
 def relationships_df(spark: SparkSession, ontology: Ontology) -> DataFrame:
-    rows = ontology.relationships or []
-    return spark.createDataFrame(rows, schema=schemas.CONCEPT_RELATIONSHIPS)
+    return _local_df(spark, ontology.relationships or [], schemas.CONCEPT_RELATIONSHIPS)
 
 
 def broadcast_dictionary(spark: SparkSession, ontology: Ontology):

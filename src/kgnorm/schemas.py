@@ -63,6 +63,10 @@ MENTION_STRUCT = T.StructType([
 ])
 
 # Exploded mentions stage table (models/mention.py:11-85 + provenance keys).
+# Row order is unspecified, within a partition too: the batch kernels
+# emit rows grouped by distinct text, not in input order.  Consumers
+# aggregate, or sort on (conv_id, turn_idx, start_offset) when they need
+# an order.
 MENTIONS = T.StructType(
     [
         T.StructField("conv_id", T.StringType(), False),

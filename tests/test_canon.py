@@ -111,3 +111,58 @@ def test_canonicalize_facts_split_equals_monolithic_reagg(spark):
     # and the untouched fact must actually be there, untouched
     untouched = [r for r in got if r[1] == 555]
     assert len(untouched) == 1 and untouched[0][8] == 1
+
+
+# A ≥4-hop 'Maps to' chain whose min id sits 4 hops from the terminal,
+# 'Mapped from' rows, a Maps-to cycle, a source with two terminals, and
+# 'Is a' rows that would merge components if they were not ignored.
+MIXED_ROWS = [
+    (11, 95, "Maps to"), (95, 94, "Maps to"), (94, 93, "Maps to"), (93, 92, "Maps to"),
+    (92, 7, "Mapped from"),
+    (300, 301, "Mapped from"), (301, 302, "Mapped from"),
+    (400, 410, "Maps to"), (400, 405, "Maps to"),
+    (500, 501, "Maps to"), (501, 500, "Maps to"),
+    (11, 1, "Is a"), (92, 300, "Is a"),
+]
+
+
+def _union_find(rows):
+    """Pure-Python reference: (components, canonical mapping)."""
+    parent = {}
+
+    def find(x):
+        while parent[x] != x:
+            parent[x] = parent[parent[x]]
+            x = parent[x]
+        return x
+
+    for a, b, rel in rows:
+        if rel in ("Maps to", "Mapped from") and a != b:
+            for v in (a, b):
+                parent.setdefault(v, v)
+            parent[find(a)] = find(b)
+    members = {}
+    for v in parent:
+        members.setdefault(find(v), []).append(v)
+    sources = {a for a, _b, rel in rows if rel == "Maps to"}
+    terminals = {b for _a, b, rel in rows if rel == "Maps to"} - sources
+    comps, mapping = {}, {}
+    for vs in members.values():
+        for v in vs:
+            comps[v] = min(vs)
+        rep = min([v for v in vs if v in terminals] or vs)
+        mapping.update({v: rep for v in vs if v != rep})
+    return comps, mapping
+
+
+def test_mixed_multi_hop_matches_union_find(spark):
+    want_comps, want_mapping = _union_find(MIXED_ROWS)
+    assert want_mapping[11] == 92 and 1 not in want_comps  # the fixture bites
+    rels = _rels(spark, MIXED_ROWS)
+    for loop_partitions in (None, 3):
+        comps = canon.connected_components(canon.alias_edges(rels), loop_partitions=loop_partitions)
+        assert {r.concept_id: r.component_id for r in comps.collect()} == want_comps
+    for loop_partitions in (None, 3):
+        mapping = canon.canonical_mapping(rels, loop_partitions=loop_partitions)
+        assert {r.concept_id: r.canonical_concept_id for r in mapping.collect()} == want_mapping
+

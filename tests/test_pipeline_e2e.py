@@ -128,3 +128,24 @@ def test_canonicalization_rewrites_aliases(spark, golden_result):
     canon_objs = {t.obj for t in out["canonical_triples"].collect()}
     assert "concept:45548361" not in canon_objs
     assert len(canon_objs) > 0
+
+
+def test_job_main_rejects_duplicate_turn_keys(spark, tmp_path, monkeypatch):
+    """The (conv_id, turn_idx) uniqueness check is a raised error, not an
+    ``assert``, so it holds under ``python -O`` too."""
+    import sys
+
+    from kgnorm import session
+
+    rows = [("C1", 0, "user", "chest pain", None, None),
+            ("C1", 0, "user", "no fever", None, None),
+            ("C2", 0, "user", "cough", None, None)]
+    src = str(tmp_path / "dups")
+    spark.createDataFrame(rows, "conv_id string, turn_idx int, role string, text string,"
+                                " tool string, ts timestamp").write.parquet(src)
+    monkeypatch.setattr(session, "get_spark", lambda *a, **k: spark)
+    monkeypatch.setattr(sys, "argv", ["kgnorm.job", "--input", src,
+                                      "--output", str(tmp_path / "out")])
+    with pytest.raises(ValueError, match="1 duplicate"):
+        job.main()
+    assert not (tmp_path / "out").exists()
